@@ -145,7 +145,8 @@ def main() -> int:
 
     # KG pipeline throughput (the north-rule metric). Plan shape matters:
     # mentions persisted columnar with pruned columns (multiple consumers),
-    # vocabulary computed once and shared, single distinct at the sink.
+    # vocabulary computed once and shared, set-form triples (one dedup),
+    # canonical distinct only over the rows subject merges can collide.
     from smart_pdf_md_spark.operators.linking import checkpointed_vocabulary
     from smart_pdf_md_spark.plans.pipeline import build_mentions, triples_from_mentions
     from smart_pdf_md_spark.operators.extract import mentions_only
@@ -170,7 +171,7 @@ def main() -> int:
         mentions = m0.coalesce(spark.sparkContext.defaultParallelism * 4)
         names = checkpointed_vocabulary(mentions)
         ents = entity_table(mentions, link_edges(mentions, names=names), names=names)
-        canon = canonical_triples(triples_from_mentions(mentions, distinct=False), ents)
+        canon = canonical_triples(triples_from_mentions(mentions), ents)
         n_triples = canon.count()
         dt = time.perf_counter() - t0
         m0.unpersist()

@@ -53,7 +53,7 @@ for _ in range(2):
     mentions = m0.coalesce(spark.sparkContext.defaultParallelism * 4)
     names = checkpointed_vocabulary(mentions)
     ents = entity_table(mentions, link_edges(mentions, names=names), names=names)
-    canon = canonical_triples(triples_from_mentions(mentions, distinct=False), ents)
+    canon = canonical_triples(triples_from_mentions(mentions), ents)
     n_triples = canon.count()
     dt = time.perf_counter() - t0
     m0.unpersist()

@@ -47,7 +47,7 @@ m = m0.coalesce(spark.sparkContext.defaultParallelism * 4)
 names = checkpointed_vocabulary(m)
 edges = link_edges(m, names=names)
 ents = entity_table(m, edges, names=names)
-canon = canonical_triples(triples_from_mentions(m, distinct=False), ents)
+canon = canonical_triples(triples_from_mentions(m), ents)
 n = canon.count()
 dt = time.perf_counter() - t0
 print("RESULT " + json.dumps({{"n_files": {n_files}, "triples": n,

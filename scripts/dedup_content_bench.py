@@ -68,8 +68,7 @@ def main() -> int:
         names = checkpointed_vocabulary(mentions)
         ents = entity_table(mentions, link_edges(mentions, names=names),
                             names=names)
-        canon = canonical_triples(
-            triples_from_mentions(mentions, distinct=False), ents)
+        canon = canonical_triples(triples_from_mentions(mentions), ents)
         n = canon.count()
         dt = time.perf_counter() - t0
         m0.unpersist()

@@ -172,7 +172,7 @@ def entity_table(mentions: DataFrame, edges: DataFrame,
 
 def canonical_triples(triples: DataFrame, entities: DataFrame,
                       edges: DataFrame | None = None) -> DataFrame:
-    """Rewrite symbol objects to canonical entity names.
+    """Rewrite symbol objects (and CALLS subjects) to canonical entity names.
 
     IMPORTS objects are modules, not symbols — left untouched. Both joins are
     broadcast: entity table and edge list are vocabulary-sized (small dims,
@@ -182,7 +182,32 @@ def canonical_triples(triples: DataFrame, entities: DataFrame,
     canonical; the TF-IDF cosine of the direct (raw, canonical) linking edge
     when one exists; 0.9 for transitive merges (linked through a third
     variant — confident but unscored).
+
+    Input contract: `triples` is a SET — no two rows agree on (subj, pred,
+    obj, file_id, repo, content_sha256) — which `triples_from_mentions`
+    returns by default; `entities` is `entity_table` output (one row per
+    name) and `edges` lists each linked pair once, as `link_edges` does.
+    Under that contract the rewrite is injective except where two subject
+    variants of one multi-member component canonicalize to the same name:
+    each output row keeps pred, `obj_raw`, file_id, repo and
+    content_sha256, and derives obj and entity_id (and conf, when `edges`
+    is given) from `obj_raw`.
+    So only CALLS rows whose subject lies in a component with
+    `component_size > 1` can collide; those go through `distinct`, and the
+    rest (IMPORTS, DEFINES, MENTIONS, singleton subjects) are unioned in
+    unchanged, without a shuffle. The output equals `distinct()` of the
+    row-wise rewrite (tested), and it is a set as well.
     """
+    rows = _canonical_rows(triples, entities, edges)
+    merged = rows.filter(F.col("_merge")).drop("_merge").distinct()
+    return rows.filter(~F.col("_merge")).drop("_merge").unionByName(merged)
+
+
+def _canonical_rows(triples: DataFrame, entities: DataFrame,
+                    edges: DataFrame | None = None) -> DataFrame:
+    """The row-wise rewrite behind `canonical_triples`, one output row per
+    input row, plus a boolean `_merge`: true on the CALLS rows whose subject
+    lies in a multi-member component — the only rows that can collide."""
     ent = F.broadcast(
         entities.select(
             F.col("name").alias("obj"),
@@ -228,22 +253,26 @@ def canonical_triples(triples: DataFrame, entities: DataFrame,
     # falls through coalesce untouched. conf stays obj-linking-scoped.
     subj_ent = F.broadcast(
         entities.select(F.col("name").alias("subj"),
-                        F.col("canonical_name").alias("_subj_canon"))
+                        F.col("canonical_name").alias("_subj_canon"),
+                        F.col("component_size").alias("_subj_size"))
     )
+    calls = F.col("pred") == "CALLS"
     sym_canon = (
         sym_canon.join(subj_ent, "subj", "left")
         .withColumn(
             "subj",
-            F.when(F.col("pred") == "CALLS",
-                   F.coalesce(F.col("_subj_canon"), F.col("subj")))
+            F.when(calls, F.coalesce(F.col("_subj_canon"), F.col("subj")))
             .otherwise(F.col("subj")),
         )
-        .drop("_subj_canon")
+        .withColumn("_merge",
+                    calls & F.coalesce(F.col("_subj_size") > 1, F.lit(False)))
+        .drop("_subj_canon", "_subj_size")
     )
     imp_canon = imp.select(
         "subj", "pred", "obj",
         F.col("obj").alias("obj_raw"),
         F.substring(F.sha2(F.col("obj"), 256), 1, 16).alias("entity_id"),
         "file_id", "repo", "content_sha256", "conf",
+        F.lit(False).alias("_merge"),
     )
-    return sym_canon.unionByName(imp_canon).distinct()
+    return sym_canon.unionByName(imp_canon)

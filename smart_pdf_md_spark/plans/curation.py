@@ -60,7 +60,7 @@ from ..operators.textstats import (
     train_val_split,
     winnow_containment_pairs,
 )
-from .manifests import run_stage
+from .manifests import run_stage, stage_rows
 
 
 def run_curation(
@@ -646,12 +646,13 @@ def run_curation(
                     "budget_tokens": mix_budget_tokens, "by": mix_by})
         _note("mix")
 
-    # one agg per committed stage — exact, cheap (reads the snapshots)
+    # committed-stage counts come from the stage manifests (exact, no Spark
+    # job); only the input needs a count
     summary = {
         "docs_in": docs.count(),
-        "after_filter": filtered.count(),
-        "after_dedup": kept.count(),
-        "chunks": chunks.count(),
+        "after_filter": stage_rows(run_dir, "filtered"),
+        "after_dedup": stage_rows(run_dir, "kept"),
+        "chunks": stage_rows(run_dir, "chunks"),
     }
     out = {
         "scrubbed": scrubbed,
@@ -662,29 +663,29 @@ def run_curation(
         "summary": summary,
     }
     if urlgate is not None:
-        summary["after_urlgate"] = urlgate.count()
+        summary["after_urlgate"] = stage_rows(run_dir, "urlgate")
         out["urlgate"] = urlgate
     if benchmarks is not None:
-        summary["after_decontam"] = clean.count()
+        summary["after_decontam"] = stage_rows(run_dir, "clean")
         out["clean"] = clean
     if lm_stage is not None:
-        summary["after_lm"] = lm_stage.count()
+        summary["after_lm"] = stage_rows(run_dir, "lm")
         out["lm"] = lm_stage
     if lines_stage is not None:
         summary["lines_removed"] = int(lines_stage.agg(
             F.coalesce(F.sum("n_removed_lines"), F.lit(0))).collect()[0][0])
         out["lines"] = lines_stage
     if clf_stage is not None:
-        summary["after_classifier"] = clf_stage.count()
+        summary["after_classifier"] = stage_rows(run_dir, "classifier")
         out["classifier"] = clf_stage
     if dsir_stage is not None:
-        summary["after_dsir"] = dsir_stage.count()
+        summary["after_dsir"] = stage_rows(run_dir, "dsir")
         out["dsir"] = dsir_stage
     if sem_stage is not None:
-        summary["after_semdedup"] = sem_stage.count()
+        summary["after_semdedup"] = stage_rows(run_dir, "semdedup")
         out["semdedup"] = sem_stage
     if spans_stage is not None:
-        summary["after_spans"] = spans_stage.count()
+        summary["after_spans"] = stage_rows(run_dir, "spans")
         if remove_dup_spans:
             summary["span_chars_removed"] = int(spans_stage.agg(
                 F.coalesce(F.sum("n_removed_chars"), F.lit(0)))
@@ -697,7 +698,7 @@ def run_curation(
         summary["val_chunks"] = int(sc.get("val", 0))
         out["split"] = split_stage
     if mix_stage is not None:
-        summary["mix_rows"] = mix_stage.count()
+        summary["mix_rows"] = stage_rows(run_dir, "mix")
         # per-domain token totals + epoch counts — the audit the mixture
         # table is specified in (Pile/Llama-style recipes)
         summary["mix_domains"] = {

@@ -12,8 +12,10 @@ manifest table partitioned by run. The sandbox has no Iceberg jar
 file, behind one small interface:
 
     run_dir/<stage>/data/b_<run_id>/      one immutable batch dir per commit
-    run_dir/<stage>/manifest_<run_id>.parquet  (stage, partition_id,
-                                           row_count, digest_xxh64, run_id)
+    run_dir/<stage>/manifest_<run_id>.json  {"stage", "run_id", "key_cols",
+                                           "batches": [{"batch", "row_count",
+                                           "digest_xxh64"}, ...]} — one
+                                           entry per batch of the snapshot
     run_dir/<stage>/_COMMITTED            JSON snapshot pointer, published
                                           LAST via temp-file + os.replace:
                                           {"run_id", "batches", "manifest"}
@@ -28,12 +30,23 @@ resolve the marker and read ONLY the batch dirs it lists. A run killed
 between data-write and marker-write leaves an orphaned batch dir that no
 reader ever sees — in particular an interrupted incremental APPEND cannot
 poison `pending_inputs` into serving half-committed rows under the old
-run_id (ADVICE r1). Per-partition `digest_xxh64` is an order-insensitive
-digest (bit_xor of per-row xxhash64 over the key columns — named for the
-algorithm it actually uses; pre-r3 snapshots called it `sha256_agg` and
-`read_manifest` renames on read), so two runs of the same input can be
-compared partition-by-partition without sorting — the A4 progress/metrics
+run_id (ADVICE r1). Each entry's `digest_xxh64` is an order-insensitive
+digest (bit_xor of per-row xxhash64 over the key columns), so two runs of
+the same input can be compared without sorting — the A4 progress/metrics
 analogue.
+
+One entry per BATCH, measured in the write itself: `commit_stage` attaches
+the row count and digest to the data write as a `DataFrame.observe`
+metric, so a commit is one Spark job — no re-scan of what it just wrote and
+no shuffle to group it. The batch is the unit the protocol publishes,
+appends and resumes, so an append copies the earlier entries and measures
+only its own batch. Per-partition entries (the pre-JSON format) recorded
+the read-time split layout, which moves with the scan-split settings;
+the per-batch entry does not. The manifest is a small JSON file, so
+`read_manifest`, `stage_global_digest`, `stage_rows` and `run_report` read
+it on the driver without a Spark job. Legacy parquet manifests (one row per
+read partition; pre-r3 ones name the digest `sha256_agg`) stay readable
+and fold into one entry for the whole snapshot.
 
 File-level incremental resume (J4): `pending_inputs` anti-joins the input
 against the file_ids already present in a committed mentions stage, so an
@@ -49,7 +62,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -265,16 +278,73 @@ def read_stage(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
     return spark.read.parquet(*_batch_paths(run_dir, stage, marker))
 
 
-def read_manifest(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
+def _digest_col(key_cols: list[str]):
+    """Order-insensitive digest of a set of rows: bit_xor of per-row
+    xxhash64 over the key columns."""
+    return F.bit_xor(F.xxhash64(*[F.col(c) for c in key_cols]))
+
+
+def _entry(batch: str | None, rows: int, digest: int | None) -> dict:
+    """One manifest entry; the digest (None for no rows) is stored as
+    unsigned 64-bit hex."""
+    return {"batch": batch, "row_count": int(rows),
+            "digest_xxh64": f"{(digest or 0) & 0xFFFFFFFFFFFFFFFF:016x}"}
+
+
+def _fold(entries) -> tuple[int, int]:
+    """(rows, digest) of a set of entries. XOR is associative and
+    commutative, so the fold does not depend on how rows were grouped."""
+    rows = digest = 0
+    for e in entries:
+        rows += e["row_count"]
+        digest ^= int(e["digest_xxh64"], 16)
+    return rows, digest
+
+
+def _scan_entry(spark: SparkSession, path: str, batch: str,
+                key_cols: list[str]) -> dict:
+    """Measure a committed batch that has no entry of its own (a snapshot
+    written before per-batch manifests) by reading it back once."""
+    r = spark.read.parquet(path).agg(
+        F.count(F.lit(1)).alias("rows"), _digest_col(key_cols).alias("d")
+    ).collect()[0]
+    return _entry(batch, r["rows"], r["d"])
+
+
+def _manifest(run_dir: str, stage: str, marker: dict) -> dict:
+    """The committed snapshot's manifest, read on the driver: the JSON
+    file as written, or a legacy parquet manifest folded into a single
+    entry (``batch`` None) that covers the whole snapshot."""
+    path = os.path.join(_stage_dir(run_dir, stage), marker["manifest"])
+    if path.endswith(".json"):
+        with open(path) as f:
+            return json.load(f)
+    import pyarrow.parquet as pq
+    rows = pq.read_table(path).to_pylist()
+    for r in rows:  # pre-r3 manifests name the digest sha256_agg
+        r.setdefault("digest_xxh64", r.get("sha256_agg"))
+    return {"stage": stage, "run_id": marker.get("run_id"), "key_cols": None,
+            "batches": [_entry(None, *_fold(rows))]}
+
+
+def _committed_manifest(run_dir: str, stage: str) -> dict:
     marker = _read_marker(run_dir, stage)
     if marker is None:
         raise FileNotFoundError(f"stage {stage!r} has no committed snapshot "
                                 f"under {run_dir!r}")
-    m = spark.read.parquet(
-        os.path.join(_stage_dir(run_dir, stage), marker["manifest"]))
-    if "sha256_agg" in m.columns:  # pre-r3 snapshots used a lying name
-        m = m.withColumnRenamed("sha256_agg", "digest_xxh64")
-    return m
+    return _manifest(run_dir, stage, marker)
+
+
+def read_manifest(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
+    """→ (stage, batch, row_count, digest_xxh64, run_id), one row per batch
+    of the committed snapshot (``run_id`` is the snapshot's). Built from the
+    manifest file on the driver; no Spark job runs until it is evaluated."""
+    m = _committed_manifest(run_dir, stage)
+    return spark.createDataFrame(
+        [(stage, e["batch"], e["row_count"], e["digest_xxh64"], m["run_id"])
+         for e in m["batches"]],
+        "stage string, batch string, row_count long, digest_xxh64 string, "
+        "run_id string")
 
 
 def commit_stage(
@@ -289,9 +359,12 @@ def commit_stage(
 ) -> DataFrame:
     """Write a fresh immutable batch dir + per-snapshot manifest, then
     atomically publish the snapshot pointer. `mode='append'` keeps the prior
-    snapshot's batches in the new pointer; a kill anywhere before the pointer
-    swap leaves the previous snapshot fully intact and the new batch
-    invisible (no torn append — ADVICE r1).
+    snapshot's batches (and their manifest entries) in the new pointer; a
+    kill anywhere before the pointer swap leaves the previous snapshot fully
+    intact and the new batch invisible (no torn append — ADVICE r1).
+
+    The batch's row count and digest are observed during the data write —
+    the commit runs one Spark job over `df` and never re-reads it.
 
     Returns the stage re-read from the committed snapshot (so downstream
     stages read disk, not the live plan — lineage cut, like the CC
@@ -317,26 +390,29 @@ def commit_stage(
             # originals are GC'd only after the swap.
             prev_batches = [_migrate_legacy_data(data_dir, prev.get("run_id"))]
 
+        # earlier batches keep their entries; a batch without one (legacy or
+        # parquet-manifest snapshot, or a key change) is measured once here
+        known: dict = {}
+        if prev is not None and prev["manifest"].endswith(".json"):
+            pm = _manifest(run_dir, stage, prev)
+            if pm["key_cols"] == key_cols:
+                known = {e["batch"]: e for e in pm["batches"]}
+        entries = [known.get(b) or _scan_entry(
+            spark, os.path.join(data_dir, b), b, key_cols)
+            for b in (prev_batches or [])]
+
         batch = f"b_{run_id}"
-        df.write.mode("overwrite").parquet(os.path.join(data_dir, batch))
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                   _digest_col(key_cols).alias("digest")) \
+            .write.mode("overwrite").parquet(os.path.join(data_dir, batch))
+        entries.append(_entry(batch, obs.get["rows"], obs.get["digest"]))
 
         batches = (prev_batches or []) + [batch]
-        committed = spark.read.parquet(
-            *[os.path.join(data_dir, b) for b in batches])
-        digest = F.bit_xor(F.xxhash64(*[F.col(c) for c in key_cols]))
-        manifest = (
-            committed.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").alias("row_count"),
-                F.format_string("%016x", digest).alias("digest_xxh64"),
-            )
-            .withColumn("stage", F.lit(stage))
-            .withColumn("run_id", F.lit(run_id))
-            .select("stage", "partition_id", "row_count", "digest_xxh64", "run_id")
-        )
-        manifest_name = f"manifest_{run_id}.parquet"
-        manifest.write.mode("overwrite").parquet(os.path.join(sdir, manifest_name))
+        manifest_name = f"manifest_{run_id}.json"
+        _write_atomic(os.path.join(sdir, manifest_name),
+                      json.dumps({"stage": stage, "run_id": run_id,
+                                  "key_cols": key_cols, "batches": entries}))
 
         ph = params_hash(params)
         if deps or ph is not None:
@@ -348,7 +424,8 @@ def commit_stage(
                       json.dumps({"run_id": run_id, "batches": batches,
                                   "manifest": manifest_name}))
         _gc_stage(sdir, keep_batches=set(batches), keep_manifest=manifest_name)
-        return committed
+        return spark.read.parquet(
+            *[os.path.join(data_dir, b) for b in batches])
 
 
 def _migrate_legacy_data(data_dir: str, legacy_run_id: str | None) -> str:
@@ -401,7 +478,12 @@ def _gc_stage(sdir: str, keep_batches: set[str], keep_manifest: str) -> None:
     for f in os.listdir(sdir):
         if (f.startswith("manifest_") or f == "manifest.parquet") \
                 and f != keep_manifest:
-            shutil.rmtree(os.path.join(sdir, f), ignore_errors=True)
+            p = os.path.join(sdir, f)
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                with contextlib.suppress(OSError):
+                    os.remove(p)
 
 
 def run_stage(
@@ -433,23 +515,21 @@ def pending_inputs(inputs_with_id: DataFrame, spark: SparkSession,
     return inputs_with_id.join(done, "file_id", "left_anti")
 
 
+def stage_rows(run_dir: str, stage: str) -> int:
+    """Committed row count of a stage, summed from its manifest on the
+    driver (no Spark job)."""
+    return _fold(_committed_manifest(run_dir, stage)["batches"])[0]
+
+
 def stage_global_digest(spark: SparkSession, run_dir: str,
                         stage: str) -> tuple[int, int]:
     """(total_rows, global_digest) for a committed stage, folded from its
-    manifest. Per-partition digests are bit_xor over per-row xxhash64 of
-    the key columns; XOR is associative/commutative, so XOR-ing the
-    partition digests yields a PARTITIONING-INVARIANT whole-stage digest —
-    two runs of the same input at any parallelism produce the same value.
-    The manifest is partition-count-sized, so the driver-side fold is
-    bounded."""
-    m = read_manifest(spark, run_dir, stage) \
-        .select("row_count", "digest_xxh64").collect()
-    digest = 0
-    rows = 0
-    for r in m:
-        rows += r.row_count
-        digest ^= int(r.digest_xxh64, 16)
-    return rows, digest
+    manifest on the driver (``spark`` is not used; no job runs). Each
+    entry's digest is a bit_xor over per-row xxhash64 of the key columns;
+    XOR is associative/commutative, so folding the entries yields a
+    LAYOUT-INVARIANT whole-stage digest — the same rows give the same value
+    whatever their batches, partitions or parallelism."""
+    return _fold(_committed_manifest(run_dir, stage)["batches"])
 
 
 def verify_stage_digests(spark: SparkSession, run_dir_a: str, run_dir_b: str,
@@ -471,16 +551,16 @@ def verify_stage_digests(spark: SparkSession, run_dir_a: str, run_dir_b: str,
 
 
 def run_report(spark: SparkSession, run_dir: str) -> DataFrame:
-    """→ (stage, run_id, n_rows, n_partitions) — one row per COMMITTED
+    """→ (stage, run_id, n_rows, n_batches) — one row per COMMITTED
     stage under ``run_dir``, read entirely from the manifest layer (no
-    data files touched): the audit view a pipeline operator queries to
-    answer "what has this run_dir committed, how big is each stage, and
-    under which run_id" — for curation runs this is the per-stage drop
-    accounting without recomputing any count. Stages are discovered from
-    the directory (anything with a _COMMITTED marker), so KG and curation
-    run_dirs both report; uncommitted/foreign subdirectories are skipped.
-    Driver-side work is one tiny manifest read per stage (manifests are
-    per-partition row-count tables, KB-sized by construction)."""
+    data files touched, no Spark job until the result is evaluated): the
+    audit view a pipeline operator queries to answer "what has this run_dir
+    committed, how big is each stage, and under which run_id" — for
+    curation runs this is the per-stage drop accounting without recomputing
+    any count. Stages are discovered from the directory (anything with a
+    _COMMITTED marker), so KG and curation run_dirs both report;
+    uncommitted/foreign subdirectories are skipped. A legacy snapshot
+    (loose files, no batch list) reports one batch."""
     rows = []
     for name in sorted(os.listdir(run_dir)):
         if not os.path.isdir(_stage_dir(run_dir, name)):
@@ -488,9 +568,8 @@ def run_report(spark: SparkSession, run_dir: str) -> DataFrame:
         marker = _read_marker(run_dir, name)
         if marker is None:
             continue
-        m = read_manifest(spark, run_dir, name) \
-            .agg(F.coalesce(F.sum("row_count"), F.lit(0)).alias("r"),
-                 F.count("*").alias("p")).collect()[0]
-        rows.append((name, marker.get("run_id"), int(m["r"]), int(m["p"])))
+        n_rows, _ = _fold(_manifest(run_dir, name, marker)["batches"])
+        rows.append((name, marker.get("run_id"), n_rows,
+                     len(marker.get("batches") or [None])))
     return spark.createDataFrame(
-        rows, "stage string, run_id string, n_rows long, n_partitions long")
+        rows, "stage string, run_id string, n_rows long, n_batches long")

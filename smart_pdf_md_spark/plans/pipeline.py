@@ -62,8 +62,9 @@ def triples_from_mentions(mentions: DataFrame, distinct: bool = True) -> DataFra
     # lines): group on the fact key and keep the MIN mention_id as lineage —
     # same shuffle as distinct, parallelism-invariant, and a consumer can
     # still join back to the originating mention row (span/line highlight).
-    # Callers that feed canonical_triples (which ends in its own distinct)
-    # pass distinct=False to save a full-data shuffle.
+    # canonical_triples relies on this set form: it dedups only the rows that
+    # subject canonicalization can merge. distinct=False returns one row per
+    # mention (the raw fact count) and must not be fed to it.
     if not distinct:
         return out
     keys = ["subj", "pred", "obj", "file_id", "repo", "content_sha256", "conf"]

@@ -19,6 +19,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, capped at 32g (32g when RAM is unknown)."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (ValueError, OSError, AttributeError):
+        return "32g"
+    return f"{min(ram_mb // 2, 32 * 1024)}m"
+
+
 def build_session(
     app_name: str = "smart_pdf_md_spark",
     master: str | None = None,
@@ -65,17 +74,28 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # local mode = driver-only: give the single JVM real headroom so
-        # cached mentions + shuffle buffers never force GC churn/eviction
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # cached mentions + shuffle buffers never force GC churn/eviction —
+        # but at most half of physical RAM: a heap allowed to grow past RAM
+        # gets the whole process OOM-killed on a small host
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         # Scan-split sizing: extraction runs scan-side (no shuffle — see
         # plans/pipeline.build_mentions), so scan splits ARE the extraction
         # tasks. Parquet splits at row-group granularity; the sandbox writes
         # small files, so pack small bins to keep all cores busy. On a real
         # cluster with 128MB row groups, raise to 128-256MB via env.
+        # Spark sizes a split at min(maxPartitionBytes, max(openCostInBytes,
+        # bytes per core)), so the open cost is a floor on the split size:
+        # an input smaller than cores × that floor scans as fewer partitions
+        # than cores (at 2 MB, a 1.5 MB corpus of 32 row groups scanned as
+        # one). 128 KB lets bytes-per-core decide from a few hundred KB up,
+        # while a file too small to split (one row group of tens of KB)
+        # still scans as one task, not one full task and several empty
+        # ones: at 0 those empty tasks cost the board queries 6-9%.
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "2097152"))
-        .config("spark.sql.files.openCostInBytes", "2097152")
+        .config("spark.sql.files.openCostInBytes", "131072")
     )
     # Env-provided conf overrides (JSON object), applied before the caller's
     # extra_conf: lets a deployment (or a bench experiment) tune any knob

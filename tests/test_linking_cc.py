@@ -87,6 +87,49 @@ def test_entity_table_merges_golden_groups(plan, edges):
         assert min(present) == min(canon | set(present))
 
 
+def test_canonical_subject_variants_collapse_to_one_row(spark):
+    """Two subject variants of one component that CALLS the same object in
+    the same file give exactly one canonical row; the same call from
+    another file and a module-level call stay separate rows."""
+    names = spark.createDataFrame(
+        [("parse_file",), ("parseFile",), ("helper",)], "name string")
+    edges = spark.createDataFrame([("parseFile", "parse_file", 0.95)],
+                                  "name_a string, name_b string, cos double")
+    ents = entity_table(None, edges, names=names)
+    triples = spark.createDataFrame([
+        ("parse_file", "CALLS", "helper", "f1", "r", "h1", 1.0, "01"),
+        ("parseFile", "CALLS", "helper", "f1", "r", "h1", 1.0, "02"),
+        ("parseFile", "CALLS", "helper", "f2", "r", "h2", 1.0, "03"),
+        ("r/a.py", "CALLS", "helper", "f1", "r", "h1", 1.0, "04"),
+    ], "subj string, pred string, obj string, file_id string, repo string, "
+       "content_sha256 string, conf double, mention_id string")
+    rows = canonical_triples(triples, ents, edges).collect()
+    assert sorted((r.subj, r.file_id) for r in rows) == [
+        ("parseFile", "f1"), ("parseFile", "f2"), ("r/a.py", "f1")]
+
+
+def test_canonical_triples_equal_distinct_of_rowwise_rewrite(plan, edges):
+    """On the fixture corpus, the scoped distinct over set-form triples
+    gives exactly distinct() of the row-wise rewrite of the raw
+    (row-per-mention) triples: same row set, same count."""
+    from smart_pdf_md_spark.operators.cc import _canonical_rows
+    from smart_pdf_md_spark.plans.pipeline import triples_from_mentions
+
+    ents = entity_table(plan["mentions"], edges)
+    raw = triples_from_mentions(plan["mentions"], distinct=False)
+    want_df = _canonical_rows(raw, ents, edges).drop("_merge").distinct()
+    got_df = canonical_triples(plan["triples"], ents, edges)
+    cols = want_df.columns
+    assert sorted(got_df.columns) == sorted(cols)
+    got = [tuple(r[c] for c in cols) for r in got_df.collect()]
+    want = [tuple(r[c] for c in cols) for r in want_df.collect()]
+    assert len(got) == len(want)
+    assert sorted(got) == sorted(want)
+    # the scoped distinct is not vacuous: subject merges collide here
+    merge = _canonical_rows(plan["triples"], ents, edges).filter("_merge")
+    assert merge.count() > merge.distinct().count()
+
+
 @pytest.mark.slow
 def test_canonical_triples(plan, edges, spark):
     ents = entity_table(plan["mentions"], edges)

@@ -64,7 +64,7 @@ def test_canonical_entity_join_is_broadcast(spark, corpus_sdf):
     m = mentions_only(build_mentions(spark, corpus_sdf)).localCheckpoint()
     names = checkpointed_vocabulary(m)
     ents = entity_table(m, link_edges(m, names=names), names=names)
-    canon = canonical_triples(triples_from_mentions(m, distinct=False), ents)
+    canon = canonical_triples(triples_from_mentions(m), ents)
     assert "BroadcastHashJoin" in _plan(canon)
 
 

@@ -7,17 +7,46 @@ import shutil
 
 import pytest
 
-from smart_pdf_md_spark.plans.driver import extract_incremental, run_kg
+from smart_pdf_md_spark.plans.driver import (
+    MENTION_KEYS,
+    TRIPLE_KEYS,
+    extract_incremental,
+    run_kg,
+)
 from smart_pdf_md_spark.plans.manifests import (
     read_manifest,
     read_stage,
     stage_committed,
+    stage_global_digest,
 )
+
+# key columns each run_kg stage commits with
+KG_STAGE_KEYS = {
+    "mentions": MENTION_KEYS,
+    "triples": TRIPLE_KEYS,
+    "edges": ["name_a", "name_b"],
+    "entities": ["name", "canonical_name"],
+    "triples_canonical": ["subj", "pred", "obj", "file_id"],
+}
 
 
 @pytest.fixture()
 def run_dir(tmp_path):
     return str(tmp_path / "run")
+
+
+def _assert_manifest_matches_disk(spark, run_dir: str, stage: str,
+                                  keys: list[str]) -> None:
+    """The rows and folded digest the manifest recorded at commit time equal
+    a recomputation over the committed data read back from disk."""
+    from pyspark.sql import functions as F
+
+    rows, digest = stage_global_digest(spark, run_dir, stage)
+    disk = read_stage(spark, run_dir, stage).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*keys)).alias("d")).collect()[0]
+    assert rows == disk["n"], stage
+    assert digest == (disk["d"] or 0) & 0xFFFFFFFFFFFFFFFF, stage
 
 
 def _data_files(run_dir: str, stage: str) -> dict[str, float]:
@@ -38,6 +67,9 @@ def test_full_run_commits_all_stages(spark, corpus_sdf, run_dir):
         m = read_manifest(spark, run_dir, stage).toPandas()
         assert m["row_count"].sum() == read_stage(spark, run_dir, stage).count()
         assert (m["stage"] == stage).all()
+        assert len(m) == 1  # one entry per committed batch
+        _assert_manifest_matches_disk(spark, run_dir, stage,
+                                      KG_STAGE_KEYS[stage])
     assert not any(res["resumed"].values())
 
 
@@ -150,6 +182,11 @@ def test_incremental_extraction_anti_join(spark, corpus_sdf, run_dir, monkeypatc
         .with_identity(corpus_sdf).select("file_id").collect()
     }
 
+    # the append measured only its own batch and kept the first entry
+    m = read_manifest(spark, run_dir, "mentions").toPandas()
+    assert len(m) == 2
+    _assert_manifest_matches_disk(spark, run_dir, "mentions", MENTION_KEYS)
+
     # third pass: nothing pending
     m3, n3 = extract_incremental(spark, corpus_sdf, run_dir)
     assert n3 == 0
@@ -242,6 +279,10 @@ def test_append_over_legacy_snapshot_keeps_all_rows(spark, run_dir):
     m = read_manifest(spark, run_dir, stage).toPandas()
     assert "digest_xxh64" in m.columns and "sha256_agg" not in m.columns
     assert m["row_count"].sum() == 15
+    # the migrated legacy batch was measured from disk (its manifest held a
+    # placeholder digest), the new batch during its write
+    assert len(m) == 2
+    _assert_manifest_matches_disk(spark, run_dir, stage, ["file_id"])
 
     # loose legacy files were GC'd after the pointer swap; batches remain
     data_dir = os.path.join(run_dir, stage, "data")
@@ -251,6 +292,7 @@ def test_append_over_legacy_snapshot_keeps_all_rows(spark, run_dir):
     commit_stage(spark.createDataFrame([("h0", 0)], ["file_id", "val"]),
                  run_dir, stage, key_cols=["file_id"], mode="append")
     assert read_stage(spark, run_dir, stage).count() == 16
+    _assert_manifest_matches_disk(spark, run_dir, stage, ["file_id"])
 
 
 def test_concurrent_appends_lose_nothing(spark, run_dir):
@@ -459,6 +501,22 @@ def test_run_report_reads_only_manifests(spark, tmp_path):
     assert set(got) == {"alpha", "beta"}
     assert got["alpha"].n_rows == 7 and got["beta"].n_rows == 3
     assert all(r.run_id for r in got.values())
+    assert got["alpha"].n_batches == 1
+
+    # the manifest readers run on the driver: no Spark job starts
+    sc = spark.sparkContext
+    group = "manifest-reads"
+    sc.setJobGroup(group, "manifest readers")
+    try:
+        assert stage_global_digest(spark, run_dir, "alpha")[0] == 7
+        run_report(spark, run_dir)
+        read_manifest(spark, run_dir, "beta")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the probe sees jobs that do start in the group
+        read_stage(spark, run_dir, "alpha").count()
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
     # manifests alone carry the report: nuke the batch data dirs
     for st in ("alpha", "beta"):
